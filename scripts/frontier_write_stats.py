@@ -1,11 +1,13 @@
 """Frontier write-amplification receipt (VERDICT r3 items 2 & 8).
 
 The merge-on-read frontier claims: a round writes O(batch) frontier bytes
-(ins/del/gains sidecars), not O(frontier) (the legacy full rewrite). This
-script measures it directly: the SAME bench crawl runs in
+(ins/gains sidecars; the deletes are crawl_log's popped keys), not
+O(frontier) (the legacy full rewrite). This script measures it directly: the
+SAME bench crawl runs in
 
-* ``full`` mode — ``compact_every=1``: every round folds the sidecars into a
-  fresh banded base, i.e. the legacy full-rewrite-per-round write pattern;
+* ``full`` mode — ``compact_every=1``: every round also writes the live view
+  out as a fresh banded base, i.e. the legacy full-rewrite-per-round write
+  pattern (plus the round's sidecars);
 * ``delta`` mode — ``compact_every=0``: pure sidecar appends, no compaction
   (the steady-state write path between compactions).
 

@@ -64,12 +64,14 @@ LONG_CFG = CrawlConfig(
 
 
 # Tables the ROUND LOOP re-reads every round — the ones whose listing/probe
-# cost must stay flat. crawl_log / evictions / round_metrics are append-only
-# OUTPUT logs (the Iceberg fast-append analog): the loop never lists them,
-# so their dir count growing with rounds is expected and harmless.
+# cost must stay flat. crawl_log / round_metrics are append-only OUTPUT logs
+# (the Iceberg fast-append analog): the loop reads crawl_log only through
+# its since-base tail (< compact_every round dirs) and never reads
+# round_metrics, so their dir count growing with rounds is expected and
+# harmless.
 LOOP_READ_TABLES = (
-    "frontier", "frontier_ins", "frontier_del", "frontier_gains",
-    "hosts", "hosts_new", "hosts_touch", "url_seen", "docs", "bloom",
+    "frontier", "frontier_ins", "frontier_gains",
+    "hosts", "hosts_new", "url_seen", "docs", "bloom",
 )
 
 

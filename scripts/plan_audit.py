@@ -176,17 +176,18 @@ def main() -> None:
     )
 
     # 6. the merge-on-read hosts live view: resolved from the base + the
-    # O(batch) hosts_touch/hosts_new sidecar logs — no full-table groupBy
-    # (the last-writer-wins fold is a join against the aggregated TOUCH log,
-    # which is tiny), no window at all. Run one real round first so the
-    # sidecar logs exist and the audited plan is the merged shape.
+    # O(batch) hosts_new sidecar log + the since-base crawl_log — no
+    # full-table groupBy (the last-writer-wins fold is a join against
+    # max(round) per popped host, which is tiny), no window at all. Run one
+    # real round first so the logs exist and the audited plan is the merged
+    # shape.
     eng.run(max_rounds=1)
     hosts_plan = _fmt(eng._hosts_live(eng.store.committed_round()))
     sections.append(
         (
             "crawl_hosts_live",
             hosts_plan,
-            [r"hosts_touch", r"hosts_new"],
+            [r"crawl_log", r"hosts_new"],
             [UNPARTITIONED_WINDOW, "CartesianProduct"],
             {},
         )

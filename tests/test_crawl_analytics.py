@@ -203,8 +203,9 @@ def test_edges_scan_prunes_on_src_bucket(engine):
 
 
 def test_frontier_del_rows_tracks_pops(engine):
-    """The size-gated frontier_del broadcast relies on the manifest's
-    arithmetic delete-log row count: with no compaction in this run
-    (compact_every > max_rounds) it must equal total pops."""
+    """The size-gated delete-key broadcast relies on the manifest's
+    arithmetic count of crawl_log rows since the frontier base: with no
+    compaction in this run (compact_every > max_rounds) it must equal total
+    pops."""
     m = engine.round_metrics().where("partition_id = -1").toPandas()
     assert int(engine.store.state("frontier_del_rows")) == int(m.fetched.sum()) > 0

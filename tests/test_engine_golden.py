@@ -97,3 +97,41 @@ def test_filterless_path_identical(spark, fixture_dir, tmp_path_factory, engine)
     seen_a = {r.url for r in engine.url_seen().collect()}
     seen_b = {r.url for r in eng2.url_seen().collect()}
     assert seen_a == seen_b
+
+
+def test_messy_seed_lines_match_oracle(spark, fixture_dir, tmp_path_factory):
+    """Seed lines are stripped of exactly what the oracle's ``str.strip()``
+    drops: blank, tab-only, ``\\x0b``/``\\xa0``-padded and duplicate lines
+    must give the oracle's seed set (no phantom whitespace url), and the
+    first rounds must crawl identically."""
+    import dataclasses
+    import os
+    import shutil
+
+    fx = str(tmp_path_factory.mktemp("messy_seeds") / "fx")
+    shutil.copytree(fixture_dir, fx)
+    seeds_path = os.path.join(fx, "seeds.txt")
+    with open(seeds_path, encoding="utf-8") as f:
+        seeds = [line for line in f.read().split("\n") if line]
+    messy = [
+        "", "\t", " \t ", "\x0b", "\xa0", "\u3000",
+        f"\x0b{seeds[0]}\xa0", f"\t{seeds[1]}  ", seeds[0],
+        *seeds[2:], f"\xa0{seeds[2]}\t", "\t\t",
+    ]
+    with open(seeds_path, "w", encoding="utf-8") as f:
+        f.write("\n".join(messy) + "\n")
+
+    cfg = dataclasses.replace(TEST_CFG, max_rounds=2)
+    oracle = FrontierOracle(fx, cfg)
+    assert sorted(set(oracle.seeds)) == sorted(seeds)
+    want = oracle.run()
+    eng = CrawlEngine(spark, fx, str(tmp_path_factory.mktemp("messy") / "s"), cfg)
+    eng.run()
+    assert eng.store.manifest()["history"][0]["seeds"] == len(oracle.seeds)
+    got_seeds = {r.url for r in eng.url_seen().where("first_round = -1").collect()}
+    assert got_seeds == {u for u in oracle.seeds if oracle.allowed(u)}
+    assert {r.url for r in eng.url_seen().collect()} == want.url_seen
+    assert _engine_log(eng) == [
+        (c["round"], c["seq"], c["url"], c["host"], c["depth"], c["score"], c["attempt"])
+        for c in want.crawl_order
+    ]

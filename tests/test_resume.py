@@ -12,8 +12,11 @@ from __future__ import annotations
 import collections
 import os
 
+import pytest
+
 from tests.conftest import TEST_CFG
 from twitter_crawler_spark.crawl.engine import CrawlEngine
+from twitter_crawler_spark.crawl.state import FORMAT_VERSION
 
 ROUNDS = 4
 
@@ -133,11 +136,12 @@ def test_uncommitted_debris_discarded(spark, fixture_dir, tmp_path_factory):
 
 
 def test_hosts_merge_on_read_equals_fold(spark, fixture_dir, tmp_path_factory):
-    """The hosts live view must be layout-independent: a pure sidecar-log run
+    """The live views must be layout-independent: a pure sidecar-log run
     (compact_every=0, never folds) and a per-round-fold run (compact_every=1,
-    the legacy full-rewrite write pattern) must expose identical hosts rows —
-    the merge-on-read resolution (base ∪ hosts_new, last-writer-wins touch
-    fold) is exactly equivalent to rewriting the table every round."""
+    the legacy full-rewrite write pattern) must expose identical hosts and
+    frontier rows — the merge-on-read resolution (base ∪ inserts ∖ crawl_log
+    pops, gains folded, last fetch round from crawl_log) is exactly
+    equivalent to rewriting the tables every round."""
     import dataclasses
 
     cfg_logs = dataclasses.replace(TEST_CFG, compact_every=0)
@@ -152,10 +156,65 @@ def test_hosts_merge_on_read_equals_fold(spark, fixture_dir, tmp_path_factory):
     h1 = sorted(tuple(r[c] for c in cols) for r in e1.hosts_live().collect())
     h2 = sorted(tuple(r[c] for c in cols) for r in e2.hosts_live().collect())
     assert h1 == h2
-    # and the log run really did stay on the delta path: no hosts base was
+    fcols = ["url", "attempt", "score", "next_fetch_ts", "last_cursor", "depth"]
+    f1 = sorted(tuple(r[c] for c in fcols) for r in e1.frontier_live().collect())
+    f2 = sorted(tuple(r[c] for c in fcols) for r in e2.frontier_live().collect())
+    assert f1 == f2 and len(f1) == e1.store.state("frontier_count")
+    # and the log run really did stay on the delta path: no base was
     # rewritten after init
     assert sorted(os.listdir(os.path.join(s1, "hosts"))) == ["r=-1"]
-    assert os.path.isdir(os.path.join(s1, "hosts_touch"))
+    assert sorted(os.listdir(os.path.join(s1, "frontier"))) == ["r=-1"]
+    # crawl_log is the only pop record, and one base round serves both views
+    for state in (s1, s2):
+        for tbl in ("frontier_del", "hosts_touch", "evictions"):
+            assert not os.path.exists(os.path.join(state, tbl)), (state, tbl)
+    assert "hosts_base_round" not in e2.store.manifest()["state"]
+    assert e2.store.state("frontier_base_round") == e2.store.committed_round()
+
+
+@pytest.mark.parametrize("version", [None, FORMAT_VERSION + 1])
+def test_foreign_format_version_refused(
+    spark, fixture_dir, tmp_path_factory, version
+):
+    """State written under another (or no) format_version must fail loudly
+    and leave the state dir byte-identical — in particular the resume path's
+    crash-debris sweep must not run on it."""
+    import json
+
+    state = str(tmp_path_factory.mktemp("format") / "s")
+    manifest = {
+        "committed_round": 0,
+        "history": [{"round": -1}, {"round": 0}],
+        "state": {"frontier_base_round": -1, "hosts_base_round": -1},
+    }
+    if version is not None:
+        manifest["format_version"] = version
+    os.makedirs(state)
+    with open(os.path.join(state, "_manifest.json"), "w") as f:
+        json.dump(manifest, f)
+    # debris a resume would sweep (round 1 > committed round 0)
+    for tbl in ("crawl_log", "frontier_del"):
+        os.makedirs(os.path.join(state, tbl, "r=1"))
+        with open(os.path.join(state, tbl, "r=1", "part-0.parquet"), "wb") as f:
+            f.write(b"old")
+
+    def snapshot():
+        out = {}
+        for root, dirs, files in os.walk(state):
+            for d in dirs:
+                out[os.path.join(root, d)] = None
+            for n in files:
+                with open(os.path.join(root, n), "rb") as f:
+                    out[os.path.join(root, n)] = f.read()
+        return out
+
+    before = snapshot()
+    eng = CrawlEngine(spark, fixture_dir, state, TEST_CFG)
+    with pytest.raises(RuntimeError, match="format_version") as exc:
+        eng.run(max_rounds=2)
+    assert state in str(exc.value)
+    assert repr(version) in str(exc.value) and str(FORMAT_VERSION) in str(exc.value)
+    assert snapshot() == before
 
 
 def test_read_rounds_skips_schema_less_empty_dirs(spark, tmp_path_factory):

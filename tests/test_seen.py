@@ -10,6 +10,7 @@ The contract for the three-tier URL-seen test (SURVEY.md §2.3):
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from twitter_crawler_spark.crawl.seen import SeenShard, make_seen_check_fn, shard_path
 
@@ -104,9 +105,11 @@ def test_check_fn_classification(tmp_path):
     assert (new_part["seen_flag"] < 2).mean() > 0.99
 
 
-def test_n_added_persists_and_legacy_load(tmp_path):
-    """The capacity policy's occupancy counter survives save/load, and
-    pre-round-5 shard files (5-element meta, no n_added) still load."""
+def test_n_added_persists_and_legacy_shard_fails_loudly(tmp_path):
+    """The capacity policy's occupancy counter survives save/load, and a
+    pre-round-5 shard file (5-element meta, no n_added) raises instead of
+    loading with a made-up counter. Such files only exist in unversioned
+    state dirs, which the manifest's format_version check refuses first."""
     rng = np.random.default_rng(5)
     sh = _shard()
     sh.add(rng.integers(-(2**62), 2**62, 1234, dtype=np.int64))
@@ -120,9 +123,8 @@ def test_n_added_persists_and_legacy_load(tmp_path):
     legacy = str(tmp_path / "legacy.npz")
     np.savez_compressed(legacy, bits=z["bits"], cuckoo=z["cuckoo"],
                         meta=z["meta"][:5])
-    old = SeenShard.load(legacy)
-    assert old.n_added == 0
-    assert old.bloom_contains(np.array([1, 2], np.int64)).dtype == bool
+    with pytest.raises(ValueError):
+        SeenShard.load(legacy)
 
 
 def test_grown_geometry_doubles_until_headroom():

@@ -111,10 +111,11 @@ class CrawlConfig:
     # rounds (0 disables compaction); bounds sidecar-resolution and
     # listing costs to O(K), amortized rewrite cost to 1/K per round
     compact_every: int = 8
-    # frontier_del broadcast gate: the delete log broadcasts into the live-
-    # frontier anti-join only while its manifest-tracked row count (reset at
-    # compaction) is at or below this bound (~2M rows x ~50 B/key ≈ 100 MB,
-    # the practical ceiling); beyond it the join is unhinted and AQE decides
+    # delete-key broadcast gate: crawl_log's since-base (url, attempt) keys
+    # broadcast into the live-frontier anti-join only while their manifest-
+    # tracked row count (frontier_del_rows, reset at compaction) is at or
+    # below this bound (~2M rows x ~50 B/key ≈ 100 MB, the practical
+    # ceiling); beyond it the join is unhinted and AQE decides
     broadcast_del_rows_max: int = 2_000_000
     # leveled compaction for the append-only logs (url_seen/docs/edges): a
     # MINOR compaction folds only the K-round tail into a NEW generation dir

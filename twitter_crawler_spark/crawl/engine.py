@@ -11,16 +11,18 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
   links    = mapInPandas outlink extraction → canonicalize → redirects    P3/P8
   new      = robots longest-prefix filter → bloom → cuckoo → exact
              anti-join vs url_seen                                        D1-D4
-  frontier' = merge-on-read delta: popped keys → frontier_del (equality-
-             delete files), reinserted ∪ new → frontier_ins (banded),
-             OPIC cash → frontier_gains; NO rewrite of the 10^10-row
-             base — the live view is base ∪ ins ∖ del with gains folded
-             at read, and the due scan partition-prunes to due
-             next_fetch_ts bands                                          F1/F3/F4/A15
-  compact  = every K rounds fold the sidecars into a fresh banded base
-             and fold url_seen/docs/edges round tails into leveled
-             generation dirs — minor folds are O(batch·K); a major merge
-             (every max_log_gens folds, LSM size-tiering) is the only
+  crawl_log = the one pop record: (round, seq, url, host, ..., attempt,
+             evicted) — the frontier's delete keys, the hosts' fetch
+             rounds and the eviction log are all read from it
+  frontier' = merge-on-read delta: reinserted ∪ new → frontier_ins
+             (banded), OPIC cash → frontier_gains; NO rewrite of the
+             10^10-row base — the live view is base ∪ ins ∖ popped keys
+             with gains folded at read, and the due scan partition-prunes
+             to due next_fetch_ts bands                                   F1/F3/F4/A15
+  compact  = every K rounds write the live frontier / hosts views out as
+             fresh bases and fold url_seen/docs/edges round tails into
+             leveled generation dirs — minor folds are O(batch·K); a major
+             merge (every max_log_gens folds, LSM size-tiering) is the only
              O(history) rewrite (Iceberg rewrite_data_files analog)
   commit   = parquet round dirs + versioned bloom sidecars + atomic
              manifest replace (Iceberg snapshot analog)                   C1/C4
@@ -37,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -214,12 +217,12 @@ class CrawlEngine:
         scan partition-prunes instead of reading the full 10^10-row state."""
         return F.expr(f"{col} div {self.cfg.band_ticks}").cast("int")
 
-    def _frontier_live(self, prev: int, due_band: int | None = None) -> DataFrame:
-        """Merge-on-read live frontier as of committed round ``prev``:
-        banded base ∪ frontier_ins appends, minus frontier_del keys (the
-        popped (url, attempt) rows — equality-delete semantics; a key is
-        inserted at most once and deleted at most once, since attempts only
-        grow per url), with pending OPIC gains folded into ``score``.
+    def _frontier_live(self, upto: int, due_band: int | None = None) -> DataFrame:
+        """Merge-on-read live frontier as of round ``upto``: banded base ∪
+        frontier_ins appends, minus the (url, attempt) keys crawl_log popped
+        since the base (equality-delete semantics; a key is inserted at most
+        once and popped at most once, since attempts only grow per url),
+        with pending OPIC gains folded into ``score``.
 
         Gains fold: a row written at round k has all gains ≤ k applied (the
         writer folds that round's gains in), so its pending cash is the sum
@@ -234,7 +237,7 @@ class CrawlEngine:
         (``frontier_del_rows``: += n_popped per round, reset at
         compaction) — so the broadcast decision is a SIZE-GATED hint, not
         a blind one (VERDICT r4 #2): below
-        ``CrawlConfig.broadcast_del_rows_max`` the log broadcasts (hinted
+        ``CrawlConfig.broadcast_del_rows_max`` the keys broadcast (hinted
         — skipping the due-slice shuffle AQE's demote-to-broadcast path
         would still materialize map-side, measured ~1 s/round at the
         bench fixture); above it the join is left unhinted and the worst
@@ -242,25 +245,30 @@ class CrawlEngine:
         slice, never the 10^10-row frontier base. At the design point
         (~10^5 rows x K=8 rounds x ~100 B/row ≈ 100 MB ≈ near the
         practical broadcast ceiling on 10^3 executors) the gate trips and
-        AQE owns the choice. The GAINS list is O(distinct outlink targets
-        x compact_every) — tens of millions of rows at the design point,
-        far too big to broadcast — deliberately unhinted always."""
+        AQE owns the choice. The counter covers committed rounds only, so
+        the compaction fold (``upto`` = the round being committed) reads
+        one batch more than it counts. The GAINS list is O(distinct
+        outlink targets x compact_every) — tens of millions of rows at the
+        design point, far too big to broadcast — deliberately unhinted
+        always."""
         st, s = self.store, self.spark
         g = int(st.state("frontier_base_round"))
         base = s.read.option(
             "basePath", os.path.join(st.root, "frontier")
         ).parquet(st.round_dir("frontier", g))
-        ins = st.read_rounds(s, "frontier_ins", prev, min_round=g + 1, drop_r=False)
+        ins = st.read_rounds(s, "frontier_ins", upto, min_round=g + 1, drop_r=False)
         rows = base if ins is None else base.unionByName(ins)
         if due_band is not None:
             rows = rows.where(F.col("band") <= due_band)
         rows = rows.withColumnRenamed("r", "_gthrough").drop("band")
-        dels = st.read_rounds(s, "frontier_del", prev, min_round=g + 1)
-        if dels is not None:
-            if int(st.state("frontier_del_rows", 0)) <= self.cfg.broadcast_del_rows_max:
+        # crawl_log is never compacted: the since-base tail is its only read
+        pops = st.read_rounds(s, "crawl_log", upto, min_round=g + 1)
+        if pops is not None:
+            dels = pops.select("url", "attempt")
+            if int(st.state("frontier_del_rows")) <= self.cfg.broadcast_del_rows_max:
                 dels = F.broadcast(dels)
             rows = rows.join(dels, ["url", "attempt"], "left_anti")
-        gains = st.read_rounds(s, "frontier_gains", prev, min_round=g + 1, drop_r=False)
+        gains = st.read_rounds(s, "frontier_gains", upto, min_round=g + 1, drop_r=False)
         if gains is not None:
             glist = gains.groupBy("url").agg(
                 F.collect_list(
@@ -283,39 +291,38 @@ class CrawlEngine:
             )
         return rows.select(*[f.name for f in schemas.FRONTIER.fields])
 
-    def _hosts_live(self, prev: int) -> DataFrame:
-        """Merge-on-read live hosts table as of committed round ``prev`` —
-        the same treatment the frontier got, applied to the second-largest
-        state table (O(#hosts) ~ 10^8 rows at the design point): a base
-        snapshot (``hosts/r=<g>``) plus two per-round O(batch) sidecar logs,
-        ``hosts_new`` (insert-once rows for hosts first discovered that
-        round, with politeness defaults) and ``hosts_touch`` (keys of hosts
-        fetched that round; the partition column ``r`` is the value). A
-        round writes only its delta instead of rewriting all 10^8 rows to
-        bump ``last_fetch_round`` on the ~10^4 hosts it actually touched.
+    def _hosts_live(self, upto: int) -> DataFrame:
+        """Merge-on-read live hosts table as of round ``upto`` — the same
+        treatment the frontier got, applied to the second-largest state
+        table (O(#hosts) ~ 10^8 rows at the design point): a base snapshot
+        (``hosts/r=<g>``, same base round as the frontier) plus the
+        insert-once ``hosts_new`` log (hosts first discovered that round,
+        with politeness defaults), with ``last_fetch_round`` taken from the
+        since-base crawl_log. A round writes only its delta instead of
+        rewriting all 10^8 rows to bump ``last_fetch_round`` on the ~10^4
+        hosts it actually touched.
 
         Resolution is last-writer-wins without a full-table groupBy:
-        ``last_fetch_round`` is monotone (touch rounds > g by construction,
-        base values ≤ g), so a left join against the aggregated touch log
-        (tiny → AQE broadcasts it) and a coalesce reproduce the rewrite
-        exactly. Inserts never collide with base rows because ``hosts_new``
-        is anti-joined against the live view at append time (insert-once)."""
+        ``last_fetch_round`` is monotone (pop rounds > g by construction,
+        base values ≤ g), so a left join against max(round) per popped
+        host (tiny → AQE broadcasts it) and a coalesce reproduce the
+        rewrite exactly. Inserts never collide with base rows because
+        ``hosts_new`` is anti-joined against the live view at append time
+        (insert-once)."""
         st, s = self.store, self.spark
-        g = int(st.state("hosts_base_round", st.state("frontier_base_round")))
+        g = int(st.state("frontier_base_round"))
         rows = s.read.parquet(st.round_dir("hosts", g))
-        news = st.read_rounds(s, "hosts_new", prev, min_round=g + 1)
+        news = st.read_rounds(s, "hosts_new", upto, min_round=g + 1)
         if news is not None:
             rows = rows.unionByName(news)
-        touch = st.read_rounds(
-            s, "hosts_touch", prev, min_round=g + 1, drop_r=False
-        )
-        if touch is not None:
-            latest = touch.groupBy("host").agg(F.max("r").alias("_lfr"))
+        pops = st.read_rounds(s, "crawl_log", upto, min_round=g + 1)
+        if pops is not None:
+            latest = pops.groupBy("host").agg(F.max("round").alias("_lfr"))
             rows = (
                 rows.join(latest, "host", "left")
                 .withColumn(
                     "last_fetch_round",
-                    F.coalesce(F.col("_lfr").cast("int"), F.col("last_fetch_round")),
+                    F.coalesce(F.col("_lfr"), F.col("last_fetch_round")),
                 )
                 .drop("_lfr")
             )
@@ -336,10 +343,15 @@ class CrawlEngine:
         (robots-filtered), hosts from the politeness table, url_seen =
         scheduled seeds, fresh bloom shards + manifest bucket map."""
         cfg, s = self.cfg, self.spark
-        # executor-parallel seed ingest (S1): text lines → trimmed non-blank
-        # urls; at 10^7 seeds this is a distributed scan, never a driver list
+        # executor-parallel seed ingest (S1): text lines → stripped non-blank
+        # urls; at 10^7 seeds this is a distributed scan, never a driver list.
+        # Stripped of exactly what the oracle's str.strip() drops (tabs,
+        # \x0b, \xa0, ...), not just the spaces F.trim removes.
+        space = "".join(
+            c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace()
+        )
         raw = s.read.text(self.seeds_path).select(
-            F.trim(F.col("value")).alias("url")
+            F.btrim(F.col("value"), F.lit(space)).alias("url")
         ).where(F.col("url") != "")
         self._n_seed_lines = raw.count()
         seeds = raw.distinct()
@@ -395,7 +407,6 @@ class CrawlEngine:
             {"seeds": self._n_seed_lines},
             state={
                 "frontier_base_round": -1,
-                "hosts_base_round": -1,
                 "frontier_count": n0,
                 "frontier_del_rows": 0,
                 "log_gens": {},
@@ -813,9 +824,6 @@ class CrawlEngine:
             & F.lit(cfg.evict_unproductive and not cfg.crawl_once)
         )
         retire_cond = F.col("attempt") + 1 >= cfg.max_attempts
-        evictions = popped_res.where(evict_cond).select(
-            "url", F.lit(r).alias("round")
-        )
         intervals_arr = F.array(*[F.lit(int(x)) for x in cfg.intervals])
         reinserted = (
             popped_res.where(
@@ -835,14 +843,14 @@ class CrawlEngine:
         )
 
         # ---- frontier delta (merge-on-read) ----------------------------------------
-        # The round never rewrites the frontier base: popped keys become
-        # equality-delete rows (on (url, attempt) — under fan-out, popping
-        # one copy must not remove the url's other scheduled copies), the
-        # reinserted + new rows become banded inserts, and the OPIC cash
-        # becomes a gains-log append. Rows written here fold this round's
-        # gains immediately (their log round r is their per-row gains
-        # watermark); every other live row picks round-r gains up from the
-        # log when it is next read.
+        # The round never rewrites the frontier base: the crawl_log row of
+        # each popped (url, attempt) key is its equality delete (keyed on the
+        # attempt too — under fan-out, popping one copy must not remove the
+        # url's other scheduled copies), the reinserted + new rows become
+        # banded inserts, and the OPIC cash becomes a gains-log append. Rows
+        # written here fold this round's gains immediately (their log round
+        # r is their per-row gains watermark); every other live row picks
+        # round-r gains up from the log when it is next read.
         gains_u = gains.withColumnRenamed("dst", "url")
         ins_rows = (
             reinserted.unionByName(new_rows)
@@ -851,7 +859,6 @@ class CrawlEngine:
             .drop("gain")
             .select(*[f.name for f in schemas.FRONTIER.fields])
         )
-        dels_df = popped.select("url", "attempt")
         # frontier size is maintained arithmetically in the manifest — no
         # O(frontier) count job: inserts = reinsertable survivors (from the
         # fused pop-stats agg below) + scheduled copies of new urls
@@ -861,12 +868,11 @@ class CrawlEngine:
         _t = _tlog("frontier_delta", _t)
 
         # ---- hosts delta (merge-on-read) --------------------------------------------
-        # The round never rewrites the hosts table: fetched host keys become
-        # a hosts_touch append (last-writer-wins on the monotone
+        # The round never rewrites the hosts table: crawl_log's host column
+        # carries the fetched hosts (last-writer-wins on the monotone
         # last_fetch_round), first-seen hosts become a hosts_new append with
         # politeness defaults (insert-once: the anti-join is against the
         # live view, so a host row is appended exactly one round).
-        hosts_touch = popped.select("host").distinct()
         hosts_new = (
             new_base.select("host").distinct()
             .join(hosts.select("host"), "host", "left_anti")
@@ -927,27 +933,22 @@ class CrawlEngine:
                 pool.submit(st.write_round, docs_new, "docs", r, ("bucket",)),
                 pool.submit(
                     st.write_round,
-                    popped.select(
+                    popped_res.select(
                         F.lit(r).alias("round"), "seq", "url", "host",
-                        "depth", "score", "attempt",
+                        "depth", "score", "attempt", evict_cond.alias("evicted"),
                     ),
                     "crawl_log", r,
                 ),
-                pool.submit(st.write_round, evictions, "evictions", r),
+                # the O(batch) delta — with crawl_log, the whole per-round
+                # frontier + hosts write
+                pool.submit(
+                    st.write_round,
+                    ins_rows.withColumn("band", self._band()),
+                    "frontier_ins", r, ("band",),
+                ),
+                pool.submit(st.write_round, gains_u, "frontier_gains", r),
+                pool.submit(st.write_round, hosts_new, "hosts_new", r),
             ]
-            if not compact:
-                # the O(batch) delta — the whole per-round frontier + hosts write
-                futs += [
-                    pool.submit(st.write_round, dels_df, "frontier_del", r),
-                    pool.submit(
-                        st.write_round,
-                        ins_rows.withColumn("band", self._band()),
-                        "frontier_ins", r, ("band",),
-                    ),
-                    pool.submit(st.write_round, gains_u, "frontier_gains", r),
-                    pool.submit(st.write_round, hosts_touch, "hosts_touch", r),
-                    pool.submit(st.write_round, hosts_new, "hosts_new", r),
-                ]
             fut_bloom = pool.submit(_bloom_task) if self.use_filters else None
             fut_stats = pool.submit(_pop_stats_task)
             for f in futs:
@@ -958,7 +959,7 @@ class CrawlEngine:
         # driver arithmetic only; the capacity policy below never loads a
         # shard on the driver
         bloom_load = {
-            int(k): list(v) for k, v in (st.state("bloom_load", {}) or {}).items()
+            int(k): list(v) for k, v in st.state("bloom_load").items()
         }
         for row in bloom_rows:
             bloom_load[int(row["bucket"])] = [
@@ -973,52 +974,27 @@ class CrawlEngine:
         frontier_n = int(st.state("frontier_count")) - n_popped + n_ins
         new_state: dict = {
             "frontier_count": frontier_n,
-            # delete-log row count since the frontier base — the arithmetic
-            # input to the size-gated broadcast in _frontier_live (each
-            # popped (url, attempt) key appears in the log exactly once);
-            # compaction truncates the log, so the counter resets with it
+            # crawl_log row count since the frontier base — the arithmetic
+            # input to the size-gated delete-key broadcast in _frontier_live
+            # (each popped (url, attempt) key appears in the log exactly
+            # once); compaction moves the base, so the counter resets with it
             "frontier_del_rows": 0 if compact
-            else int(st.state("frontier_del_rows", 0)) + n_popped,
+            else int(st.state("frontier_del_rows")) + n_popped,
         }
         _t = _tlog("writes_parallel", _t)
 
         # ---- compaction (Iceberg rewrite_data_files analog) -------------------
-        # every compact_every rounds: fold the sidecar logs into a fresh
-        # banded base and merge the loop-read logs into one generation dir,
-        # so sidecar broadcast size, dir listings and dead-row carry stay
-        # O(K) — amortized cost 1/K of a full rewrite per round
+        # every compact_every rounds: write the live views as of this round
+        # out as fresh bases (the sidecar logs truncate with them) and merge
+        # the loop-read logs into one generation dir, so sidecar broadcast
+        # size, dir listings and dead-row carry stay O(K) — amortized cost
+        # 1/K of a full rewrite per round
         if compact:
-            pending = self._frontier_live(prev).join(
-                F.broadcast(dels_df), ["url", "attempt"], "left_anti"
-            )
-            f_base = (
-                pending.join(gains_u, "url", "left")
-                .withColumn(
-                    "score",
-                    (F.col("score") + F.coalesce("gain", F.lit(0))).cast("long"),
-                )
-                .drop("gain")
-                .select(*[f.name for f in schemas.FRONTIER.fields])
-                .unionByName(ins_rows)
-            )
             st.write_round(
-                f_base.withColumn("band", self._band()), "frontier", r,
-                partition_by=("band",),
+                self._frontier_live(r).withColumn("band", self._band()),
+                "frontier", r, partition_by=("band",),
             )
-            # hosts: fold the live view (as of prev) + this round's delta
-            # into a fresh base; the sidecar logs truncate with it
-            h_base = (
-                hosts.join(
-                    hosts_touch.withColumn("_lfr", F.lit(r)), "host", "left"
-                )
-                .withColumn(
-                    "last_fetch_round",
-                    F.coalesce(F.col("_lfr"), F.col("last_fetch_round")),
-                )
-                .drop("_lfr")
-                .unionByName(hosts_new)
-            )
-            st.write_round(h_base, "hosts", r)
+            st.write_round(self._hosts_live(r), "hosts", r)
             # leveled compaction of the append-only logs: MINOR folds only
             # the tail rounds since the newest generation (O(batch·K) bytes;
             # the 10^10-row url_seen history is NOT rewritten every K
@@ -1026,7 +1002,7 @@ class CrawlEngine:
             # merges them into one — the LSM size-tiering trade: the
             # O(total) rewrite is amortized over max_log_gens*compact_every
             # rounds while reads union ≤ max_log_gens+K dirs
-            log_gens = {k: list(v) for k, v in st.state("log_gens", {}).items()}
+            log_gens = {k: list(v) for k, v in st.state("log_gens").items()}
             major_done: list[str] = []
             for tbl, pby in (("url_seen", ("bucket",)), ("docs", ("bucket",)),
                              ("edges", ("src_bucket",))):
@@ -1046,7 +1022,6 @@ class CrawlEngine:
                         st.write_gen(tail, tbl, r, partition_by=pby)
                         log_gens[tbl] = gens + [r]
             new_state["frontier_base_round"] = r
-            new_state["hosts_base_round"] = r
             new_state["log_gens"] = log_gens
             # ---- bloom capacity policy (VERDICT r4 #2): a bucket whose
             # lifetime-insert load n/m crossed bloom_max_load — or whose
@@ -1155,8 +1130,7 @@ class CrawlEngine:
         if compact:
             st.gc_rounds_below("frontier", r)
             st.gc_rounds_below("hosts", r)
-            for tbl in ("frontier_ins", "frontier_del", "frontier_gains",
-                        "hosts_touch", "hosts_new",
+            for tbl in ("frontier_ins", "frontier_gains", "hosts_new",
                         "url_seen", "docs", "edges"):
                 st.gc_rounds_below(tbl, r + 1)
             # generation dirs are GC'd only after a MAJOR merge supersedes
@@ -1192,7 +1166,7 @@ class CrawlEngine:
         ).drop("bucket")
 
     def evictions(self) -> DataFrame:
-        return self.store.read_log(self.spark, "evictions", self.store.committed_round())
+        return self.crawl_log().where("evicted").select("url", "round")
 
     def round_metrics(self) -> DataFrame:
         return self.store.read_log(

@@ -191,9 +191,7 @@ class SeenShard:
     @classmethod
     def load(cls, path: str) -> "SeenShard":
         z = np.load(path)
-        meta = [int(x) for x in z["meta"]]
-        m, k, cb, cs, ov = meta[:5]
-        n_added = meta[5] if len(meta) > 5 else 0  # pre-round-5 shard files
+        m, k, cb, cs, ov, n_added = (int(x) for x in z["meta"])
         return cls(m, k, cb, cs, bits=z["bits"], cuckoo=z["cuckoo"],
                    overflowed=bool(ov), n_added=n_added)
 

@@ -12,15 +12,20 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
 * readers always filter partition ``r <= committed_round`` so half-written
   rounds are invisible — resume after a crash re-runs the uncommitted round
   from the last committed state with zero re-fetch of committed rounds;
+* ``crawl_log`` is the one pop record: each round appends its popped
+  ``(url, attempt)`` rows with their host and an ``evicted`` flag. The
+  frontier's deletes, the hosts' fetch rounds and the eviction log are all
+  read from it, never written separately;
 * the **frontier is merge-on-read** (the Iceberg MERGE / delete-file
   analog): a banded base (``frontier/r=<g>/band=<B>`` where band =
   next_fetch_ts div band_ticks) plus per-round sidecar logs —
-  ``frontier_ins`` (inserted rows, banded), ``frontier_del`` (popped
-  (url, attempt) keys ≡ equality-delete files), ``frontier_gains`` (pending
-  OPIC cash). A round writes only its O(batch) delta; the live view is
-  base ∪ ins ∖ del with gains folded at read time. Periodic compaction
-  (``CrawlConfig.compact_every``) rewrites the base and truncates the logs,
-  exactly Iceberg's rewrite_data_files maintenance action;
+  ``frontier_ins`` (inserted rows, banded) and ``frontier_gains`` (pending
+  OPIC cash) — with crawl_log's since-base ``(url, attempt)`` keys as the
+  equality deletes. A round writes only its O(batch) delta; the live view
+  is base ∪ ins ∖ popped with gains folded at read time. Periodic
+  compaction (``CrawlConfig.compact_every``) writes the live view out as
+  the new base and truncates the logs, exactly Iceberg's rewrite_data_files
+  maintenance action;
 * append-only logs that the round loop reads (``url_seen``, ``docs``,
   ``edges``) compact into **leveled generations** (``<table>/gen=<g>`` dirs
   listed in the manifest's ``log_gens``): a minor compaction folds only the
@@ -30,15 +35,18 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
   size-tiering). Listings stay O(rounds-since-compaction + #generations) and
   the O(total-history) rewrite is amortized over
   ``max_log_gens × compact_every`` rounds;
+* the manifest carries ``format_version``; a store written under any other
+  (or no) version is refused with an error instead of being half-loaded;
 * the bloom/cuckoo sidecar for each bucket is resolved through the
   manifest's ``bloom_map`` (bucket → newest committed round that wrote that
   bucket's shard) — O(1) per bucket, no newest-first filesystem probing;
 * ``hosts`` is merge-on-read too (O(#hosts) ~ 10^8 rows at the design
-  point): a base snapshot plus per-round ``hosts_new`` (insert-once rows)
-  and ``hosts_touch`` (fetched host keys; last-writer-wins on the monotone
-  ``last_fetch_round``) sidecar logs, folded into a fresh base by the same
-  periodic compaction. The READ side of hosts stays a full scan per round
-  (the pop path joins budgets/delays to the due slice, and new-host
+  point): a base snapshot plus the per-round ``hosts_new`` (insert-once
+  rows) sidecar log, with ``last_fetch_round`` taken from the since-base
+  crawl_log (last-writer-wins on the monotone round); the same periodic
+  compaction writes the live view out as a fresh base, and both bases
+  share the manifest's ``frontier_base_round``. The READ side of hosts
+  stays a full scan per round (the pop path joins budgets/delays to the due slice, and new-host
   discovery anti-joins against host keys) — deliberately: the scan is
   O(#hosts), 10^2-10^3 x smaller than the frontier, carries no per-round
   write amplification, and cannot be key-pruned because the due slice's
@@ -63,12 +71,13 @@ from pyspark.sql import functions as F
 
 STATE_TABLES = ("frontier", "hosts")
 LOG_TABLES = (
-    "url_seen", "edges", "docs", "crawl_log", "round_metrics", "evictions",
-    "frontier_ins", "frontier_del", "frontier_gains",
-    "hosts_touch", "hosts_new",
+    "url_seen", "edges", "docs", "crawl_log", "round_metrics",
+    "frontier_ins", "frontier_gains", "hosts_new",
 )
 # loop-read logs that compaction merges into a generation dir
 COMPACTED_LOGS = ("url_seen", "docs", "edges")
+# on-disk layout + manifest keys; any incompatible change bumps it
+FORMAT_VERSION = 1
 
 
 def _has_data_files(path: str) -> bool:
@@ -92,11 +101,23 @@ class SnapshotStore:
         return os.path.join(self.root, "_manifest.json")
 
     def manifest(self) -> dict | None:
+        """The committed manifest, or None for a fresh store. A manifest of
+        another (or no) ``format_version`` raises and the store is left
+        untouched: old state fails loudly instead of half-loading."""
         try:
             with open(self._manifest_path) as f:
-                return json.load(f)
+                m = json.load(f)
         except FileNotFoundError:
             return None
+        found = m.get("format_version")
+        if found != FORMAT_VERSION:
+            raise RuntimeError(
+                f"state dir {self.root!r} has format_version {found!r}, but "
+                f"this engine reads format_version {FORMAT_VERSION}; it will "
+                "not load or modify it — resume with the engine that wrote "
+                "it, or start a fresh crawl in a new state dir"
+            )
+        return m
 
     def committed_round(self) -> int | None:
         m = self.manifest()
@@ -114,6 +135,7 @@ class SnapshotStore:
         the structured state (``state`` keys replace previous values) with
         them. Nothing written this round is readable before this replace."""
         m = self.manifest() or {"history": [], "state": {}}
+        m["format_version"] = FORMAT_VERSION
         m["committed_round"] = round_
         m["history"] = m.get("history", []) + [
             {"round": round_, **(info or {})}

@@ -93,7 +93,9 @@ HOSTS = StructType(
 )
 
 # the golden crawl-order trace (implicit zset pop order,
-# RedisFutureStorage.scala:50,94)
+# RedisFutureStorage.scala:50,94) and the one pop record: the frontier's
+# (url, attempt) deletes, the hosts' last_fetch_round and the eviction log
+# ("Delete rare url", RedisFutureStorage.scala:123-143) are read from it
 CRAWL_LOG = StructType(
     [
         StructField("round", IntegerType(), False),
@@ -103,6 +105,7 @@ CRAWL_LOG = StructType(
         StructField("depth", IntegerType(), False),
         StructField("score", LongType(), False),
         StructField("attempt", IntegerType(), False),
+        StructField("evicted", BooleanType(), False),
     ]
 )
 
