@@ -16,7 +16,8 @@ protocol notes), so single-shot timing is a coin flip. The query bench
 therefore runs REPS full interleaved passes over the query list and reports
 the per-query MIN plus all raw walls; the crawl section runs CRAWL_REPS
 times and reports the best run. Interleaving means a throttle burst poisons
-one pass, not one query — the same discipline as scripts/scaling_bench.py.
+one pass, not one query — the same discipline as the time-adjacent
+pairings of scripts/scaling_stages.py.
 
 Env knobs: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SF_DIR,
 TCS_BENCH_PAGES (fixture size, default 8000), TCS_BENCH_ROUNDS (default 6),

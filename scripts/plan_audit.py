@@ -101,7 +101,7 @@ def main() -> None:
             bans = bans + _JVM_ONLY
         sections.append((name, plan, WANTS.get(name, []), bans, waived))
 
-    # 2. the fetch-join shape from the crawl engine (bucket pruning + broadcast)
+    # 2. the crawl engine's fetch join (bucket pruning + broadcast)
     from twitter_crawler_spark.crawl.engine import CrawlEngine
     from twitter_crawler_spark.fixtures.webgen import generate_web
 
@@ -116,16 +116,24 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     frontier = eng._frontier_live(-1)
-    popped = frontier.limit(5).select("url", "last_cursor")
-    fetch = (
-        eng._pages()
-        .where(F.col("bucket").isin([0, 1, 2]))
-        .join(F.broadcast(popped), "url")
-        .where((F.col("ts_logical") <= 3600) & (F.col("ts_logical") > F.col("last_cursor")))
-        .select("url", "ts_logical", "html")
-    )
+    # audit the frame the engine's _fetch stage materializes: its plan is
+    # captured as _fetch checkpoints it (the checkpoint itself plans as a
+    # scan of the materialized rows)
+    popped, _, page_buckets, _ = eng._pop(frontier, eng._hosts_live(-1), 0, 0)
+    checkpoint = type(popped).localCheckpoint
+    fetch_plans: list[str] = []
+
+    def capturing(df, *args, **kwargs):
+        fetch_plans.append(_fmt(df))
+        return checkpoint(df, *args, **kwargs)
+
+    type(popped).localCheckpoint = capturing
+    try:
+        eng._fetch(popped, page_buckets, 0)
+    finally:
+        type(popped).localCheckpoint = checkpoint
     sections.append(
-        ("crawl_fetch_join", _fmt(fetch), ["BroadcastHashJoin", "PartitionFilters"], [], {})
+        ("crawl_fetch_join", fetch_plans[0], ["BroadcastHashJoin", "PartitionFilters"], [], {})
     )
 
     # 3. the pop dataflow: every window MUST be partitioned. Audits the REAL

@@ -2,30 +2,40 @@
 round, replacing the reference's actor/thread topology
 (topologies/RedisGraphBuilderTopology.scala, threads/RedisSearchThread.scala).
 
-Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
+Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native.
+``_round`` is this pipeline, one stage method per line (right column):
 
   due      = frontier ⋉ hosts   (next_fetch_ts ≤ t_r, crawl-delay gate)   F2/F7
+             ``_frontier_live`` / ``_hosts_live``
   popped   = salted two-stage per-host budget window + global total order F5/F8
+             ``_pop`` (``_pop_survivors`` → ``_pop_ranged`` → ``_attach_seq``)
   fetched  = pages ⋈ broadcast(popped) with bucket partition pruning and
              the cursor predicate pushed to the parquet scan              J9/F12/S2
+             ``_fetch``
   links    = mapInPandas outlink extraction → canonicalize → redirects    P3/P8
+             ``_outlinks``; edges + docs appends ``_appends``; OPIC cash
+             ``_gains``
   new      = robots longest-prefix filter → bloom → cuckoo → exact
              anti-join vs url_seen                                        D1-D4
+             ``_candidates`` → ``_seen_tiers`` (``_exact_new``)
   crawl_log = the one pop record: (round, seq, url, host, ..., attempt,
              evicted) — the frontier's delete keys, the hosts' fetch
-             rounds and the eviction log are all read from it
+             rounds and the eviction log are all read from it      ``_deltas``
   frontier' = merge-on-read delta: reinserted ∪ new → frontier_ins
              (banded), OPIC cash → frontier_gains; NO rewrite of the
              10^10-row base — the live view is base ∪ ins ∖ popped keys
              with gains folded at read, and the due scan partition-prunes
              to due next_fetch_ts bands                                   F1/F3/F4/A15
+             ``_deltas``, written concurrently by ``_writes``
   compact  = every K rounds write the live frontier / hosts views out as
              fresh bases and fold url_seen/docs/edges round tails into
              leveled generation dirs — minor folds are O(batch·K); a major
              merge (every max_log_gens folds, LSM size-tiering) is the only
              O(history) rewrite (Iceberg rewrite_data_files analog)
+             ``_compact``
   commit   = parquet round dirs + versioned bloom sidecars + atomic
              manifest replace (Iceberg snapshot analog)                   C1/C4
+             ``_metrics`` → ``SnapshotStore.commit`` → ``_gc``
 
 Determinism invariant: crawl order is a pure function of the data — the
 popped batch is totally ordered by ``(depth, -score, url)`` (integer OPIC
@@ -41,7 +51,9 @@ import json
 import os
 import sys
 import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
+from itertools import accumulate
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -76,6 +88,36 @@ def _tlog(label: str, t0: float) -> float:
 
 def _host_col(url):
     return F.substring_index(F.substring_index(url, "://", -1), "/", 1)
+
+
+# layout partition columns of the bucketed / banded state tables
+_PARTITION_BY = {
+    "url_seen": ("bucket",),
+    "docs": ("bucket",),
+    "edges": ("src_bucket",),
+    "frontier_ins": ("band",),
+}
+
+
+def _extract(it):
+    """mapInPandas body of the outlinks stage: one fused Arrow pass of html
+    decode + link extraction, ``(url, html)`` → ``(src_url, href, anchor)``."""
+    for pdf in it:
+        if not len(pdf):
+            continue
+        html_str = decode_html(pdf["html"])
+        links = extract_links(html_str)
+        if not len(links):
+            continue
+        src = pdf["url"].reset_index(drop=True)
+        links = links.reset_index(level=1, drop=True)
+        yield pd.DataFrame(
+            {
+                "src_url": src.iloc[links.index].to_numpy(),
+                "href": links["href"].to_numpy(),
+                "anchor": links["anchor"].to_numpy(),
+            }
+        )
 
 
 def require_shared_state(master: str, state_dir: str, declared_shared: bool) -> None:
@@ -216,6 +258,10 @@ class CrawlEngine:
         rows at round r all live in bands ≤ t_r div band_ticks, so the due
         scan partition-prunes instead of reading the full 10^10-row state."""
         return F.expr(f"{col} div {self.cfg.band_ticks}").cast("int")
+
+    def _seen_bucket(self):
+        """url_seen / docs / edges layout bucket: url_hash % seen_partitions."""
+        return F.pmod("url_hash", F.lit(self.cfg.seen_partitions))
 
     def _frontier_live(self, upto: int, due_band: int | None = None) -> DataFrame:
         """Merge-on-read live frontier as of round ``upto``: banded base ∪
@@ -379,7 +425,7 @@ class CrawlEngine:
         # layout SURVEY.md §4 custom item 1 specifies
         seen = fr.select(
             "url_hash", "url", F.lit(-1).alias("first_round"),
-            F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("bucket"),
+            self._seen_bucket().alias("bucket"),
         )
         self.store.write_round(
             fr.withColumn("band", self._band()), "frontier", -1,
@@ -491,7 +537,7 @@ class CrawlEngine:
             survivors.repartitionByRange(cfg.seq_range_partitions, *self._order_cols())
             .withColumn("_pid", F.spark_partition_id())
             .withColumn("_b", F.pmod("url_hash", F.lit(cfg.pages_buckets)))
-            .withColumn("_sb", F.pmod("url_hash", F.lit(cfg.seen_partitions)))
+            .withColumn("_sb", self._seen_bucket())
         )
 
     def _attach_seq(self, ranged: DataFrame, offsets: dict[int, int]) -> DataFrame:
@@ -563,57 +609,53 @@ class CrawlEngine:
             seen_scan.select(F.col("url").alias("dst")), "dst", "left_anti"
         )
 
-    # ------------------------------------------------------------------ a round
+    # ------------------------------------------------------------ round stages
+    # One method per line of the module docstring's pipeline, each taking and
+    # returning DataFrames plus driver-side counters. _round chains them;
+    # scripts/plan_audit.py, scripts/seen_prune_stats.py and
+    # scripts/scaling_stages.py drive the same methods.
 
-    def _round(self, r: int) -> int:
-        cfg, s = self.cfg, self.spark
-        t0 = time.time()
-        t_r = r * cfg.round_tick
-        prev = r - 1
-        # State is ALWAYS re-read from the committed parquet snapshot, never
-        # carried as an in-memory DataFrame across rounds: a carried plan
-        # (even a local checkpoint) propagates Catalyst sizeInBytes estimates
-        # through every join of every round, and the estimate grows ~4× per
-        # round — by round ~10 the BigInt stats arithmetic alone takes
-        # minutes (SizeInBytesOnlyStatsPlanVisitor multiplies them). Parquet
-        # leaves reset the estimate to real file sizes each round.
-        # The due scan partition-prunes to bands ≤ t_r div band_ticks —
-        # future-scheduled bands are never read.
-        due_live = self._frontier_live(prev, due_band=t_r // cfg.band_ticks)
-        hosts = self._hosts_live(prev).localCheckpoint()
-        _t = time.time()
-
-        # ---- pop: due filter + crawl-delay + salted per-host budget window ----
-        survivors = self._pop_survivors(due_live, hosts, t_r, r)
+    def _pop(
+        self, due: DataFrame, hosts: DataFrame, t_r: int, r: int
+    ) -> tuple[DataFrame, int, list[int], list[int]]:
+        """pop: due filter + crawl-delay + salted per-host budget window →
+        range-partitioned batch → ONE collect → seq offsets → ``popped``.
+        Returns ``(popped, n_popped, page_buckets, seen_buckets)``; the bucket
+        lists prune the fetch join's pages scan and the docs anti-join."""
+        survivors = self._pop_survivors(due, hosts, t_r, r)
         # The checkpoint pins the sampled range partitioning so the offsets
         # collected below can never disagree with the window's partitions
-        # (and cuts lineage: the batch is consumed by five downstream stages;
-        # durability comes from the snapshot store, not from this).
+        # (and cuts lineage; durability comes from the snapshot store).
         ranged = self._pop_ranged(survivors).localCheckpoint()
         # one job: per-(range-partition, page-bucket, seen-bucket) counts →
-        # batch size, the bucket lists for fetch-join AND docs-anti-join
-        # partition pruning, AND the seq offsets, all from one tiny collect
-        pb_counts = ranged.groupBy("_pid", "_b", "_sb").count().collect()
-        n_popped = sum(int(row["count"]) for row in pb_counts)
-        pid_totals: dict[int, int] = {}
-        for row in pb_counts:
-            pid_totals[int(row["_pid"])] = pid_totals.get(int(row["_pid"]), 0) + int(row["count"])
-        offsets: dict[int, int] = {}
-        acc = 0
-        for pid in sorted(pid_totals):
-            offsets[pid] = acc
-            acc += pid_totals[pid]
+        # batch size, both bucket lists AND the seq offsets
+        counts = ranged.groupBy("_pid", "_b", "_sb").count().collect()
+        pid_totals: Counter[int] = Counter()
+        for row in counts:
+            pid_totals[int(row["_pid"])] += int(row["count"])
+        pids = sorted(pid_totals)
+        offsets = dict(zip(pids, accumulate([0] + [pid_totals[p] for p in pids])))
         popped = self._attach_seq(ranged, offsets).localCheckpoint()
-        bucket_counts = [row for row in pb_counts]
-        _t = _tlog("pop", _t)
+        ranged.unpersist()
+        return (
+            popped,
+            sum(pid_totals.values()),
+            sorted({int(row["_b"]) for row in counts}),
+            sorted({int(row["_sb"]) for row in counts}),
+        )
 
-        # ---- fetch join: bucket partition pruning + broadcast of the batch ----
+    def _fetch(
+        self, popped: DataFrame, page_buckets: list[int], t_r: int
+    ) -> tuple[DataFrame, DataFrame]:
+        """fetch: pages ⋈ broadcast(popped) over the bucket-pruned pages scan,
+        cursor predicate pushed to parquet. Returns ``(fetched, res)``: every
+        new snapshot, and per url its count, new cursor and latest html."""
+        cfg = self.cfg
         lang_ok = F.lit(True) if cfg.lang_filter is None else (F.col("lang") == cfg.lang_filter)
-        if n_popped:
-            buckets = sorted({int(row["_b"]) for row in bucket_counts})
+        if page_buckets:
             fetched = (
                 self._pages()
-                .where(F.col("bucket").isin(buckets))
+                .where(F.col("bucket").isin(page_buckets))
                 .join(F.broadcast(popped.select("url", "last_cursor")), "url")
                 .where(
                     (F.col("ts_logical") <= t_r)
@@ -624,36 +666,17 @@ class CrawlEngine:
                 .localCheckpoint()
             )
         else:
-            fetched = local_df(s, [], "url string, ts_logical long, html binary")
-
-        # per-url fetch result: count, cursor, latest snapshot html
+            fetched = local_df(self.spark, [], "url string, ts_logical long, html binary")
         res = fetched.groupBy("url").agg(
             F.count("*").alias("n_results"),
             F.max("ts_logical").alias("new_cursor"),
             F.max_by("html", "ts_logical").alias("latest_html"),
         ).localCheckpoint()
-        _t = _tlog("fetch_join", _t)
+        return fetched, res
 
-        # ---- outlink extraction (one fused Arrow pass) + canonicalize --------
-        def _extract(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                html_str = decode_html(pdf["html"])
-                links = extract_links(html_str)
-                if not len(links):
-                    continue
-                src = pdf["url"].reset_index(drop=True)
-                links = links.reset_index(level=1, drop=True)
-                out = pd.DataFrame(
-                    {
-                        "src_url": src.iloc[links.index].to_numpy(),
-                        "href": links["href"].to_numpy(),
-                        "anchor": links["anchor"].to_numpy(),
-                    }
-                )
-                yield out
-
+    def _outlinks(self, fetched: DataFrame) -> DataFrame:
+        """links: one fused Arrow extraction pass → canonicalize → redirects,
+        deduplicated per (src_url, dst) and checkpointed (many consumers)."""
         raw_links = fetched.select("url", "html").mapInPandas(
             _extract, "src_url string, href string, anchor string"
         )
@@ -666,22 +689,25 @@ class CrawlEngine:
             .drop("short_url", "long_url", "href")
             .where(F.col("dst") != F.col("src_url"))
         )
-        outlinks = (
+        return (
             links.groupBy("src_url", "dst")
             .agg(F.min("anchor").alias("anchor"))
-            .localCheckpoint()  # one Arrow extraction pass, many consumers
+            .localCheckpoint()
         )
-        _t = _tlog("extract", _t)
 
-        # ---- edges + docs appends --------------------------------------------
+    def _appends(
+        self, outlinks: DataFrame, res: DataFrame, popped: DataFrame, r: int,
+        seen_buckets: list[int],
+    ) -> dict[str, DataFrame]:
+        """The round's ``edges`` and ``docs`` appends (lazy)."""
+        cfg = self.cfg
         # edges is laid out bucketed by src_bucket = murmur3_64(src_url) %
         # seen_partitions (same modulus family as url_seen/docs) so the
         # analytics tier's per-source scans (J1 1-hop, J5 adjacency collect)
         # partition-prune instead of reading the full append-only edge
-        # history — the last state table that had no pruning story (VERDICT
-        # r4 #7). The hash comes from the popped batch (src urls ARE the
+        # history. The hash comes from the popped batch (src urls ARE the
         # popped urls), so no recompute and no Python crossing.
-        edges_new = outlinks.join(
+        edges = outlinks.join(
             F.broadcast(popped.select(F.col("url").alias("src_url"), "url_hash")),
             "src_url",
         ).select(
@@ -689,23 +715,20 @@ class CrawlEngine:
             F.col("dst").alias("dst_url"),
             "anchor",
             F.lit(r).alias("round"),
-            F.lit(t_r).cast("long").alias("ts"),
-            F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("src_bucket"),
+            F.lit(r * cfg.round_tick).cast("long").alias("ts"),
+            self._seen_bucket().alias("src_bucket"),
         )
         # docs is laid out bucketed by url_hash % seen_partitions exactly like
         # url_seen, so this first-fetch anti-join prunes to the buckets the
         # popped batch occupies instead of shuffling the whole append-only
         # docs log every round (the largest log at the design point)
-        docs_all = self.store.read_log(s, "docs", prev)
+        docs_all = self.store.read_log(self.spark, "docs", r - 1)
         first_fetch = res
         if docs_all is not None:
-            pop_buckets = sorted({int(row["_sb"]) for row in pb_counts})
-            if pop_buckets and len(pop_buckets) < cfg.seen_partitions:
-                docs_scan = docs_all.where(F.col("bucket").isin(pop_buckets))
-            else:
-                docs_scan = docs_all
-            first_fetch = res.join(docs_scan.select("url"), "url", "left_anti")
-        docs_new = (
+            if seen_buckets and len(seen_buckets) < cfg.seen_partitions:
+                docs_all = docs_all.where(F.col("bucket").isin(seen_buckets))
+            first_fetch = res.join(docs_all.select("url"), "url", "left_anti")
+        docs = (
             first_fetch.withColumn("html_str", F.decode("latest_html", "UTF-8"))
             .withColumn(
                 "text",
@@ -721,47 +744,53 @@ class CrawlEngine:
                 F.lit(r).alias("round"),
                 "text",
                 F.sha2(F.encode("text", "UTF-8"), 256).alias("text_sha256"),
-                F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("bucket"),
+                self._seen_bucket().alias("bucket"),
             )
         )
+        return {"edges": edges, "docs": docs}
 
-        # ---- OPIC gains (integer cash, order-independent) ---------------------
+    @staticmethod
+    def _gains(outlinks: DataFrame, popped: DataFrame) -> DataFrame:
+        """OPIC gains per target url: integer cash, order-independent."""
         outdeg = outlinks.groupBy("src_url").agg(F.count("*").alias("outdeg"))
-        gains = (
+        return (
             outlinks.join(outdeg, "src_url")
             .join(popped.select(F.col("url").alias("src_url"), "score"), "src_url")
             .withColumn("gain", F.expr("score div outdeg"))
-            .groupBy("dst")
+            .groupBy(F.col("dst").alias("url"))
             .agg(F.sum("gain").alias("gain"))
         )
 
-        # ---- candidate scheduling: ONE fused aggregation computes, per distinct
-        # candidate url, both the min parent depth and the winning robots rule —
-        # robots evaluation rides the dedup shuffle of the outlink set, then the
-        # bloom/cuckoo flags are attached in the same pass before a single
-        # materialization. Fewer passes over the candidate set is exactly what
-        # matters at 10^10 candidates/round.
+    def _candidates(self, outlinks: DataFrame, popped: DataFrame) -> DataFrame:
+        """Candidate scheduling: ONE fused aggregation computes, per distinct
+        candidate url, both the min parent depth and the winning robots rule
+        (robots evaluation rides the dedup shuffle of the outlink set), then
+        murmur3 and the seen bucket. Fewer passes over the candidate set is
+        exactly what matters at 10^10 candidates/round."""
         cand0 = outlinks.join(
             popped.select(F.col("url").alias("src_url"), F.col("depth").alias("pdepth")),
             "src_url",
         ).select("dst", "pdepth")
         j, rule = self._robots_join(cand0, "dst")
-        cand = (
+        return (
             j.groupBy("dst")
             .agg(F.min("pdepth").alias("parent_depth"), F.max(rule).alias("best"))
             .withColumn("allowed", F.coalesce(F.col("best.allow"), F.lit(True)))
             .drop("best")
             .withColumn("url_hash", murmur3_64_udf("dst"))
-            .withColumn("bucket", F.pmod("url_hash", F.lit(cfg.seen_partitions)))
+            .withColumn("bucket", self._seen_bucket())
         )
 
-        # bucket → shard path from the committed manifest: O(1) resolution
-        # per bucket inside tasks, regardless of how many rounds have run
-        bucket_paths = self.store.bloom_paths() if self.use_filters else {}
+    def _seen_tiers(
+        self, cand: DataFrame, prev: int, bucket_paths: dict[int, str]
+    ) -> tuple[DataFrame, dict[int, int], dict[str, int]]:
+        """new: robots verdict → bloom → cuckoo → exact anti-join vs url_seen.
+        Returns ``(new_urls, new_stats, tiers)``: the checkpointed new urls,
+        their count per seen partition, and the candidate / robots / bloom /
+        cuckoo counters."""
         if self.use_filters:
-            check = make_seen_check_fn(bucket_paths)
             flagged = cand.groupBy("bucket").applyInPandas(
-                check,
+                make_seen_check_fn(bucket_paths),
                 "dst string, parent_depth int, allowed boolean,"
                 " url_hash long, bucket int, seen_flag int",
             ).localCheckpoint()
@@ -771,16 +800,20 @@ class CrawlEngine:
         # per bucket — the bucket list of the flag-2 slice drives partition
         # pruning of the exact-tier seen scan below
         stats = flagged.groupBy("allowed", "seen_flag", "bucket").count().collect()
-        n_candidates = sum(int(row["count"]) for row in stats)
-        n_blocked = sum(int(row["count"]) for row in stats if not row["allowed"])
-        n_bloom_neg = sum(
-            int(row["count"]) for row in stats
-            if row["allowed"] and row["seen_flag"] == 0 and self.use_filters
-        )
-        n_cuckoo_rej = sum(
-            int(row["count"]) for row in stats
-            if row["allowed"] and row["seen_flag"] == 1 and self.use_filters
-        )
+
+        def n(pred) -> int:
+            return sum(int(row["count"]) for row in stats if pred(row))
+
+        tiers = {
+            "candidates": n(lambda row: True),
+            "robots_blocked": n(lambda row: not row["allowed"]),
+            "bloom_negative": n(
+                lambda row: row["allowed"] and row["seen_flag"] == 0 and self.use_filters
+            ),
+            "cuckoo_rejected": n(
+                lambda row: row["allowed"] and row["seen_flag"] == 1 and self.use_filters
+            ),
+        }
         exact_buckets = sorted(
             {int(row["bucket"]) for row in stats if row["allowed"] and row["seen_flag"] == 2}
         )
@@ -789,18 +822,26 @@ class CrawlEngine:
         need_exact = ok.where("seen_flag = 2").drop("seen_flag")
         exact_new = self._exact_new(need_exact, prev, exact_buckets)
         new_urls = fast_new.unionByName(exact_new).localCheckpoint()
-        # one job: total + per-seen-partition new-url counts (metrics reuse)
-        part = F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("partition_id")
+        flagged.unpersist()
+        # one job: per-seen-partition new-url counts (metrics reuse)
         new_stats = {
             int(row["partition_id"]): int(row["new_urls"])
-            for row in new_urls.groupBy(part).agg(
-                F.count("*").alias("new_urls")
-            ).collect()
+            for row in new_urls.groupBy(self._seen_bucket().alias("partition_id"))
+            .agg(F.count("*").alias("new_urls"))
+            .collect()
         }
-        n_new = sum(new_stats.values())
-        _t = _tlog("seen_tiers", _t)
-        n_dupes = n_candidates - n_blocked - n_new
+        return new_urls, new_stats, tiers
 
+    def _deltas(
+        self, popped: DataFrame, res: DataFrame, new_urls: DataFrame,
+        gains: DataFrame, hosts: DataFrame, r: int,
+    ) -> tuple[DataFrame, dict[str, DataFrame]]:
+        """The round's state deltas: ``url_seen`` appends, the ``crawl_log``
+        pop record, and the merge-on-read frontier and hosts deltas. Returns
+        ``(popped_res, tables)``: the checkpointed batch with its fetch
+        outcome and evict/reinsert flags, and the lazy per-table frames."""
+        cfg = self.cfg
+        t_r = r * cfg.round_tick
         new_base = new_urls.select(
             F.col("dst").alias("url"),
             "url_hash",
@@ -810,39 +851,35 @@ class CrawlEngine:
             F.lit(-1).cast("long").alias("last_cursor"),
             F.lit(r).alias("src_round"),
         )
-        new_rows = self._schedule_rows(new_base, t_r)
-
-        # ---- reinsert / evict / retire ------------------------------------------
-        popped_res = (
-            popped.join(res.select("url", "n_results", "new_cursor"), "url", "left")
-            .withColumn("n_results", F.coalesce("n_results", F.lit(0)))
-            .withColumn("new_cursor", F.coalesce("new_cursor", "last_cursor"))
-        ).localCheckpoint()
-        evict_cond = (
+        # reinsert / evict / retire
+        evict = (
             (F.col("n_results") == 0)
             & (F.col("attempt") >= 1)
             & F.lit(cfg.evict_unproductive and not cfg.crawl_once)
         )
-        retire_cond = F.col("attempt") + 1 >= cfg.max_attempts
+        popped_res = (
+            popped.join(res.select("url", "n_results", "new_cursor"), "url", "left")
+            .withColumn("n_results", F.coalesce("n_results", F.lit(0)))
+            .withColumn("new_cursor", F.coalesce("new_cursor", "last_cursor"))
+            .withColumn("evicted", evict)
+            .withColumn(
+                "reinsert",
+                ~F.col("evicted") & (F.col("attempt") + 1 < cfg.max_attempts),
+            )
+        ).localCheckpoint()
         intervals_arr = F.array(*[F.lit(int(x)) for x in cfg.intervals])
-        reinserted = (
-            popped_res.where(
-                ~evict_cond & ~retire_cond
-                & F.lit(not cfg.crawl_once and not cfg.fanout_revisits)
-            )
-            .select(
-                "url", "url_hash", "host", "depth",
-                F.when(F.col("n_results") > 0, F.lit(0))
-                .otherwise(F.col("score")).cast("long").alias("score"),
-                (F.col("attempt") + 1).alias("attempt"),
-                (F.lit(t_r) + F.element_at(intervals_arr, F.col("attempt") + 2))
-                .cast("long").alias("next_fetch_ts"),
-                F.col("new_cursor").alias("last_cursor"),
-                "src_round",
-            )
+        reinserted = popped_res.where(
+            F.col("reinsert") & F.lit(not cfg.crawl_once and not cfg.fanout_revisits)
+        ).select(
+            "url", "url_hash", "host", "depth",
+            F.when(F.col("n_results") > 0, F.lit(0))
+            .otherwise(F.col("score")).cast("long").alias("score"),
+            (F.col("attempt") + 1).alias("attempt"),
+            (F.lit(t_r) + F.element_at(intervals_arr, F.col("attempt") + 2))
+            .cast("long").alias("next_fetch_ts"),
+            F.col("new_cursor").alias("last_cursor"),
+            "src_round",
         )
-
-        # ---- frontier delta (merge-on-read) ----------------------------------------
         # The round never rewrites the frontier base: the crawl_log row of
         # each popped (url, attempt) key is its equality delete (keyed on the
         # attempt too — under fan-out, popping one copy must not remove the
@@ -851,25 +888,15 @@ class CrawlEngine:
         # written here fold this round's gains immediately (their log round
         # r is their per-row gains watermark); every other live row picks
         # round-r gains up from the log when it is next read.
-        gains_u = gains.withColumnRenamed("dst", "url")
-        ins_rows = (
-            reinserted.unionByName(new_rows)
-            .join(gains_u, "url", "left")
+        frontier_ins = (
+            reinserted.unionByName(self._schedule_rows(new_base, t_r))
+            .join(gains, "url", "left")
             .withColumn("score", (F.col("score") + F.coalesce("gain", F.lit(0))).cast("long"))
             .drop("gain")
             .select(*[f.name for f in schemas.FRONTIER.fields])
         )
-        # frontier size is maintained arithmetically in the manifest — no
-        # O(frontier) count job: inserts = reinsertable survivors (from the
-        # fused pop-stats agg below) + scheduled copies of new urls
-        sched_mult = cfg.max_attempts if cfg.fanout_revisits else 1
-        base_round = int(self.store.state("frontier_base_round"))
-        compact = cfg.compact_every > 0 and (r - base_round) >= cfg.compact_every
-        _t = _tlog("frontier_delta", _t)
-
-        # ---- hosts delta (merge-on-read) --------------------------------------------
-        # The round never rewrites the hosts table: crawl_log's host column
-        # carries the fetched hosts (last-writer-wins on the monotone
+        # The round never rewrites the hosts table either: crawl_log's host
+        # column carries the fetched hosts (last-writer-wins on the monotone
         # last_fetch_round), first-seen hosts become a hosts_new append with
         # politeness defaults (insert-once: the anti-join is against the
         # live view, so a host row is appended exactly one round).
@@ -880,13 +907,33 @@ class CrawlEngine:
             .withColumn("crawl_delay_rounds", F.lit(cfg.default_crawl_delay))
             .withColumn("last_fetch_round", F.lit(None).cast("int"))
         )
+        return popped_res, {
+            "url_seen": new_base.select(
+                "url_hash", "url", F.lit(r).alias("first_round"),
+                self._seen_bucket().alias("bucket"),
+            ),
+            "crawl_log": popped_res.select(
+                F.lit(r).alias("round"), "seq", "url", "host",
+                "depth", "score", "attempt", "evicted",
+            ),
+            # the O(batch) delta — with crawl_log, the whole per-round
+            # frontier + hosts write
+            "frontier_ins": frontier_ins.withColumn("band", self._band()),
+            "frontier_gains": gains,
+            "hosts_new": hosts_new,
+        }
 
-        # ---- write round outputs + bloom update + remaining stats, all jobs
-        # over materialized checkpoints → submitted CONCURRENTLY from driver
-        # threads (Spark schedules independent jobs in parallel; wall time is
-        # the max, not the sum — the analog of parallel Iceberg table appends
-        # before one snapshot commit)
-        st = self.store
+    def _writes(
+        self, r: int, tables: dict[str, DataFrame], popped_res: DataFrame,
+        n_new: int, bucket_paths: dict[int, str],
+    ) -> tuple[dict, list]:
+        """Write the round's tables, update the bloom shards and collect the
+        per-partition pop stats — all jobs over materialized checkpoints,
+        submitted CONCURRENTLY from driver threads (Spark schedules
+        independent jobs in parallel; wall time is the max, not the sum —
+        the analog of parallel Iceberg table appends before one snapshot
+        commit). Returns ``(pop_stats, bloom_rows)``."""
+        cfg, st = self.cfg, self.store
 
         def _bloom_task():
             # per-bucket shard versioning: only buckets with new urls get a
@@ -895,10 +942,7 @@ class CrawlEngine:
             if n_new:
                 upd = make_seen_update_fn(bucket_paths, st.bloom_dir(r), cfg)
                 return (
-                    new_base.select(
-                        "url_hash",
-                        F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("bucket"),
-                    )
+                    tables["url_seen"].select("url_hash", "bucket")
                     .groupBy("bucket")
                     .applyInPandas(upd, SHARD_STATS_SCHEMA)
                     .collect()
@@ -908,46 +952,21 @@ class CrawlEngine:
         def _pop_stats_task():
             return {
                 int(row["partition_id"]): row
-                for row in popped_res.groupBy(part).agg(
+                for row in popped_res.groupBy(
+                    self._seen_bucket().alias("partition_id")
+                ).agg(
                     F.count("*").alias("fetched"),
                     F.sum((F.col("n_results") > 0).cast("long")).alias("hits"),
                     F.sum("n_results").alias("results"),
-                    F.sum(evict_cond.cast("long")).alias("evicted"),
-                    F.sum(
-                        ((~evict_cond) & (~retire_cond)).cast("long")
-                    ).alias("reinsertable"),
+                    F.sum(F.col("evicted").cast("long")).alias("evicted"),
+                    F.sum(F.col("reinsert").cast("long")).alias("reinsertable"),
                 ).collect()
             }
 
         with ThreadPoolExecutor(max_workers=10) as pool:
             futs = [
-                pool.submit(
-                    st.write_round,
-                    new_base.select(
-                        "url_hash", "url", F.lit(r).alias("first_round"),
-                        F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("bucket"),
-                    ),
-                    "url_seen", r, ("bucket",),
-                ),
-                pool.submit(st.write_round, edges_new, "edges", r, ("src_bucket",)),
-                pool.submit(st.write_round, docs_new, "docs", r, ("bucket",)),
-                pool.submit(
-                    st.write_round,
-                    popped_res.select(
-                        F.lit(r).alias("round"), "seq", "url", "host",
-                        "depth", "score", "attempt", evict_cond.alias("evicted"),
-                    ),
-                    "crawl_log", r,
-                ),
-                # the O(batch) delta — with crawl_log, the whole per-round
-                # frontier + hosts write
-                pool.submit(
-                    st.write_round,
-                    ins_rows.withColumn("band", self._band()),
-                    "frontier_ins", r, ("band",),
-                ),
-                pool.submit(st.write_round, gains_u, "frontier_gains", r),
-                pool.submit(st.write_round, hosts_new, "hosts_new", r),
+                pool.submit(st.write_round, df, tbl, r, _PARTITION_BY.get(tbl))
+                for tbl, df in tables.items()
             ]
             fut_bloom = pool.submit(_bloom_task) if self.use_filters else None
             fut_stats = pool.submit(_pop_stats_task)
@@ -955,25 +974,93 @@ class CrawlEngine:
                 f.result()
             pop_stats = fut_stats.result()
             bloom_rows = fut_bloom.result() if fut_bloom is not None else []
-        # fold this round's shard stats into the manifest's occupancy map —
-        # driver arithmetic only; the capacity policy below never loads a
-        # shard on the driver
-        bloom_load = {
-            int(k): list(v) for k, v in st.state("bloom_load").items()
-        }
-        for row in bloom_rows:
-            bloom_load[int(row["bucket"])] = [
-                int(row["n_total"]), int(row["m_bits"]), bool(row["overflowed"]),
-            ]
-        n_evicted = sum(int(row["evicted"]) for row in pop_stats.values())
+        return pop_stats, bloom_rows
+
+    def _compact(self, r: int, bloom_rows: list) -> tuple[dict, list, list[str]]:
+        """compaction (Iceberg rewrite_data_files analog), every
+        compact_every rounds: write the live views as of this round out as
+        fresh bases (the sidecar logs truncate with them), fold the
+        append-only logs into generation dirs and rebuild saturated bloom
+        shards. Keeps sidecar broadcast size, dir listings and dead-row
+        carry O(K) — amortized cost 1/K of a full rewrite per round.
+        Returns ``(state, rebuilt, major_done)``: the manifest keys it moves,
+        the shard stats of rebuilt buckets, and the logs a MAJOR merge
+        superseded."""
+        cfg, st, s = self.cfg, self.store, self.spark
+        st.write_round(
+            self._frontier_live(r).withColumn("band", self._band()),
+            "frontier", r, partition_by=("band",),
+        )
+        st.write_round(self._hosts_live(r), "hosts", r)
+        # leveled compaction of the append-only logs: MINOR folds only
+        # the tail rounds since the newest generation (O(batch·K) bytes;
+        # the 10^10-row url_seen history is NOT rewritten every K
+        # rounds), MAJOR (once max_log_gens generations accumulate)
+        # merges them into one — the LSM size-tiering trade: the
+        # O(total) rewrite is amortized over max_log_gens*compact_every
+        # rounds while reads union ≤ max_log_gens+K dirs
+        log_gens = {k: list(v) for k, v in st.state("log_gens").items()}
+        major_done: list[str] = []
+        for tbl in ("url_seen", "docs", "edges"):
+            gens = log_gens.get(tbl, [])
+            if len(gens) + 1 > cfg.max_log_gens:
+                merged = st.read_log(s, tbl, r)
+                if merged is not None:
+                    st.write_gen(merged, tbl, r, partition_by=_PARTITION_BY[tbl])
+                    log_gens[tbl] = [r]
+                    major_done.append(tbl)
+            else:
+                tail = st.read_rounds(
+                    s, tbl, r, min_round=(gens[-1] + 1) if gens else None,
+                )
+                if tail is not None:
+                    st.write_gen(tail, tbl, r, partition_by=_PARTITION_BY[tbl])
+                    log_gens[tbl] = gens + [r]
+        # bloom capacity policy: a bucket whose lifetime-insert load n/m
+        # crossed bloom_max_load — or whose cuckoo overflowed — is REBUILT
+        # here from the authoritative url_seen table (bucket-pruned scan of
+        # rows compaction touches anyway) with doubled geometry. A bloom
+        # cannot grow in place (bit positions are hash-mod-m), so growth =
+        # exact rebuild at the compaction commit, the same atomic point that
+        # rewrites the frontier base; geometry doubles each rebuild, so a
+        # bucket is rebuilt O(log n) times over the whole crawl. The
+        # saturation check is pure driver arithmetic over the manifest's
+        # occupancy map — no shard I/O unless a rebuild actually fires.
+        rebuilt: list = []
+        if self.use_filters and cfg.bloom_autogrow:
+            sat_geom = {
+                b: grown_geometry(n, cfg)
+                for b, (n, m, ov) in self._bloom_load(bloom_rows).items()
+                if ov or n > cfg.bloom_max_load * m
+            }
+            if sat_geom:
+                rebuild = make_shard_rebuild_fn(st.bloom_dir(r), sat_geom, cfg)
+                rebuilt = (
+                    st.read_log(s, "url_seen", r)
+                    .where(F.col("bucket").isin(sorted(sat_geom)))
+                    .select("url_hash", "bucket")
+                    .groupBy("bucket")
+                    .applyInPandas(rebuild, SHARD_STATS_SCHEMA)
+                    .collect()
+                )
+        return {"frontier_base_round": r, "log_gens": log_gens}, rebuilt, major_done
+
+    def _frontier_state(
+        self, n_popped: int, n_new: int, pop_stats: dict, compact: bool
+    ) -> dict:
+        """The manifest's frontier counters after this round."""
+        cfg, st = self.cfg, self.store
+        # frontier size is maintained arithmetically in the manifest — no
+        # O(frontier) count job: inserts = reinsertable survivors (from the
+        # fused pop-stats agg) + scheduled copies of new urls
         if cfg.crawl_once or cfg.fanout_revisits:
             n_reinserted = 0
         else:
             n_reinserted = sum(int(row["reinsertable"]) for row in pop_stats.values())
-        n_ins = n_reinserted + n_new * sched_mult
-        frontier_n = int(st.state("frontier_count")) - n_popped + n_ins
-        new_state: dict = {
-            "frontier_count": frontier_n,
+        sched_mult = cfg.max_attempts if cfg.fanout_revisits else 1
+        return {
+            "frontier_count": int(st.state("frontier_count")) - n_popped
+            + n_reinserted + n_new * sched_mult,
             # crawl_log row count since the frontier base — the arithmetic
             # input to the size-gated delete-key broadcast in _frontier_live
             # (each popped (url, attempt) key appears in the log exactly
@@ -981,105 +1068,50 @@ class CrawlEngine:
             "frontier_del_rows": 0 if compact
             else int(st.state("frontier_del_rows")) + n_popped,
         }
-        _t = _tlog("writes_parallel", _t)
 
-        # ---- compaction (Iceberg rewrite_data_files analog) -------------------
-        # every compact_every rounds: write the live views as of this round
-        # out as fresh bases (the sidecar logs truncate with them) and merge
-        # the loop-read logs into one generation dir, so sidecar broadcast
-        # size, dir listings and dead-row carry stay O(K) — amortized cost
-        # 1/K of a full rewrite per round
-        if compact:
-            st.write_round(
-                self._frontier_live(r).withColumn("band", self._band()),
-                "frontier", r, partition_by=("band",),
-            )
-            st.write_round(self._hosts_live(r), "hosts", r)
-            # leveled compaction of the append-only logs: MINOR folds only
-            # the tail rounds since the newest generation (O(batch·K) bytes;
-            # the 10^10-row url_seen history is NOT rewritten every K
-            # rounds), MAJOR (once max_log_gens generations accumulate)
-            # merges them into one — the LSM size-tiering trade: the
-            # O(total) rewrite is amortized over max_log_gens*compact_every
-            # rounds while reads union ≤ max_log_gens+K dirs
-            log_gens = {k: list(v) for k, v in st.state("log_gens").items()}
-            major_done: list[str] = []
-            for tbl, pby in (("url_seen", ("bucket",)), ("docs", ("bucket",)),
-                             ("edges", ("src_bucket",))):
-                gens = log_gens.get(tbl, [])
-                if len(gens) + 1 > cfg.max_log_gens:
-                    merged = st.read_log(s, tbl, r)
-                    if merged is not None:
-                        st.write_gen(merged, tbl, r, partition_by=pby)
-                        log_gens[tbl] = [r]
-                        major_done.append(tbl)
-                else:
-                    tail = st.read_rounds(
-                        s, tbl, r,
-                        min_round=(gens[-1] + 1) if gens else None,
-                    )
-                    if tail is not None:
-                        st.write_gen(tail, tbl, r, partition_by=pby)
-                        log_gens[tbl] = gens + [r]
-            new_state["frontier_base_round"] = r
-            new_state["log_gens"] = log_gens
-            # ---- bloom capacity policy (VERDICT r4 #2): a bucket whose
-            # lifetime-insert load n/m crossed bloom_max_load — or whose
-            # cuckoo overflowed — is REBUILT here from the authoritative
-            # url_seen table (bucket-pruned scan of rows compaction touches
-            # anyway) with doubled geometry. A bloom cannot grow in place
-            # (bit positions are hash-mod-m), so growth = exact rebuild at
-            # the compaction commit, the same atomic point that rewrites the
-            # frontier base; geometry doubles each rebuild, so a bucket is
-            # rebuilt O(log n) times over the whole crawl. The saturation
-            # check is pure driver arithmetic over the manifest's occupancy
-            # map — no shard I/O unless a rebuild actually fires.
-            if self.use_filters and cfg.bloom_autogrow:
-                sat_geom = {
-                    b: grown_geometry(n, cfg)
-                    for b, (n, m, ov) in bloom_load.items()
-                    if ov or n > cfg.bloom_max_load * m
-                }
-                if sat_geom:
-                    rebuild = make_shard_rebuild_fn(st.bloom_dir(r), sat_geom, cfg)
-                    rebuilt = (
-                        st.read_log(s, "url_seen", r)
-                        .where(F.col("bucket").isin(sorted(sat_geom)))
-                        .select("url_hash", "bucket")
-                        .groupBy("bucket")
-                        .applyInPandas(rebuild, SHARD_STATS_SCHEMA)
-                        .collect()
-                    )
-                    bloom_rows = list(bloom_rows) + rebuilt
-                    for row in rebuilt:
-                        bloom_load[int(row["bucket"])] = [
-                            int(row["n_total"]), int(row["m_bits"]),
-                            bool(row["overflowed"]),
-                        ]
-            _t = _tlog("compaction", _t)
+    def _bloom_load(self, shard_rows: list) -> dict[int, list]:
+        """The manifest's per-bucket occupancy ``[n_total, m_bits,
+        overflowed]`` with ``shard_rows`` folded in — driver arithmetic only;
+        the capacity policy never loads a shard on the driver."""
+        load = {int(k): list(v) for k, v in self.store.state("bloom_load").items()}
+        for row in shard_rows:
+            load[int(row["bucket"])] = [
+                int(row["n_total"]), int(row["m_bits"]), bool(row["overflowed"]),
+            ]
+        return load
 
-        # bloom manifest map: buckets whose shard this round replaced
-        bloom_touch = [int(row["bucket"]) for row in bloom_rows]
-        old_map = st.bloom_map()
-        superseded = {b: old_map[b] for b in bloom_touch if b in old_map}
-        if bloom_touch:
-            bm = {str(k): v for k, v in old_map.items()}
-            bm.update({str(b): r for b in bloom_touch})
-            new_state["bloom_map"] = bm
-            new_state["bloom_load"] = {str(k): v for k, v in bloom_load.items()}
+    def _bloom_state(self, r: int, shard_rows: list) -> tuple[dict, dict[int, int]]:
+        """Manifest bloom map + occupancy for the buckets whose shard this
+        round replaced, and the superseded shards (GC'd after the commit)."""
+        touched = [int(row["bucket"]) for row in shard_rows]
+        old_map = self.store.bloom_map()
+        superseded = {b: old_map[b] for b in touched if b in old_map}
+        if not touched:
+            return {}, superseded
+        bm = {str(k): v for k, v in old_map.items()}
+        bm.update({str(b): r for b in touched})
+        load = self._bloom_load(shard_rows)
+        return {
+            "bloom_map": bm,
+            "bloom_load": {str(k): v for k, v in load.items()},
+        }, superseded
 
-        # ---- per-partition lineage + metrics --------------------------------------
-        wall_ms = int((time.time() - t0) * 1000)
+    def _metrics(
+        self, r: int, base_round: int, wall_ms: int, bloom_buckets: int | None,
+        n_popped: int, tiers: dict[str, int], pop_stats: dict,
+        new_stats: dict[int, int],
+    ) -> DataFrame:
+        """round_metrics rows with their lineage: one per seen partition,
+        totals on partition_id = -1 — pure driver-side assembly of the
+        counters the fused jobs of the earlier stages already collected."""
         lineage = json.dumps(
             {
                 "round": r,
-                "inputs": [st.round_dir("frontier", base_round), self.pages_path],
+                "inputs": [self.store.round_dir("frontier", base_round), self.pages_path],
                 "frontier_logs_since": base_round,
-                "bloom_buckets": len(bucket_paths) if self.use_filters else None,
+                "bloom_buckets": bloom_buckets,
             }
         )
-        # pop_stats / new_stats were collected above (fused jobs) — pure
-        # driver-side assembly from here
         rows = []
         total_hits = total_results = 0
         for pid in sorted(set(pop_stats) | set(new_stats)):
@@ -1095,23 +1127,104 @@ class CrawlEngine:
                     new_stats.get(pid, 0), 0, 0, 0, 0, 0, wall_ms, lineage,
                 )
             )
-        # round-level totals on partition_id = -1
+        n_new = sum(new_stats.values())
         rows.append(
             (
-                r, -1, n_popped, total_hits, total_results,
-                n_new, n_dupes, n_blocked, n_evicted, n_bloom_neg, n_cuckoo_rej,
+                r, -1, n_popped, total_hits, total_results, n_new,
+                tiers["candidates"] - tiers["robots_blocked"] - n_new,
+                tiers["robots_blocked"],
+                sum(int(row["evicted"]) for row in pop_stats.values()),
+                tiers["bloom_negative"], tiers["cuckoo_rejected"],
                 wall_ms, lineage,
             )
         )
         # one file: the frame is O(#partitions) rows of counters by
         # construction — local_df plans a LocalTableScan (no Python workers
         # at action time) and the coalesce keeps it to one part file
-        metrics_df = local_df(self.spark, rows, schemas.ROUND_METRICS).coalesce(1)
-        _t = _tlog("metrics_assemble", _t)
-        st.write_round(metrics_df, "round_metrics", r)
-        _t = _tlog("metrics", _t)
+        return local_df(self.spark, rows, schemas.ROUND_METRICS).coalesce(1)
 
-        # ---- atomic snapshot commit ---------------------------------------------------
+    def _gc(self, r: int, superseded: dict[int, int], major_done: list[str] | None) -> None:
+        """Post-commit GC (idempotent: only removes data the committed
+        manifest can no longer reference); ``major_done`` is None unless the
+        round compacted."""
+        st = self.store
+        if superseded:
+            st.gc_bloom(superseded)
+        if major_done is None:
+            return
+        st.gc_rounds_below("frontier", r)
+        st.gc_rounds_below("hosts", r)
+        for tbl in ("frontier_ins", "frontier_gains", "hosts_new",
+                    "url_seen", "docs", "edges"):
+            st.gc_rounds_below(tbl, r + 1)
+        # generation dirs are GC'd only after a MAJOR merge supersedes
+        # them; minor compactions leave prior generations live
+        for tbl in major_done:
+            st.gc_gens_below(tbl, r)
+
+    # ------------------------------------------------------------------ a round
+
+    def _round(self, r: int) -> int:
+        cfg, st = self.cfg, self.store
+        t0 = time.time()
+        t_r, prev = r * cfg.round_tick, r - 1
+        # State is ALWAYS re-read from the committed parquet snapshot, never
+        # carried as an in-memory DataFrame across rounds: a carried plan
+        # (even a local checkpoint) propagates Catalyst sizeInBytes estimates
+        # through every join of every round, and the estimate grows ~4× per
+        # round — by round ~10 the BigInt stats arithmetic alone takes
+        # minutes (SizeInBytesOnlyStatsPlanVisitor multiplies them). Parquet
+        # leaves reset the estimate to real file sizes each round.
+        # The due scan partition-prunes to bands ≤ t_r div band_ticks —
+        # future-scheduled bands are never read.
+        due = self._frontier_live(prev, due_band=t_r // cfg.band_ticks)
+        hosts = self._hosts_live(prev).localCheckpoint()
+        _t = time.time()
+        popped, n_popped, page_buckets, seen_buckets = self._pop(due, hosts, t_r, r)
+        _t = _tlog("pop", _t)
+        fetched, res = self._fetch(popped, page_buckets, t_r)
+        _t = _tlog("fetch_join", _t)
+        outlinks = self._outlinks(fetched)
+        _t = _tlog("extract", _t)
+        appends = self._appends(outlinks, res, popped, r, seen_buckets)
+        gains = self._gains(outlinks, popped)
+        # bucket → shard path from the committed manifest: O(1) resolution
+        # per bucket inside tasks, regardless of how many rounds have run
+        bucket_paths = st.bloom_paths() if self.use_filters else {}
+        new_urls, new_stats, tiers = self._seen_tiers(
+            self._candidates(outlinks, popped), prev, bucket_paths
+        )
+        n_new = sum(new_stats.values())
+        _t = _tlog("seen_tiers", _t)
+        popped_res, deltas = self._deltas(popped, res, new_urls, gains, hosts, r)
+        _t = _tlog("frontier_delta", _t)
+        pop_stats, bloom_rows = self._writes(
+            r, {**deltas, **appends}, popped_res, n_new, bucket_paths
+        )
+        _t = _tlog("writes_parallel", _t)
+
+        base_round = int(st.state("frontier_base_round"))
+        compact = cfg.compact_every > 0 and (r - base_round) >= cfg.compact_every
+        new_state = self._frontier_state(n_popped, n_new, pop_stats, compact)
+        major_done = None
+        if compact:
+            gen_state, rebuilt, major_done = self._compact(r, bloom_rows)
+            new_state.update(gen_state)
+            bloom_rows = bloom_rows + rebuilt
+            _t = _tlog("compaction", _t)
+        bloom_state, superseded = self._bloom_state(r, bloom_rows)
+        new_state.update(bloom_state)
+
+        wall_ms = int((time.time() - t0) * 1000)
+        metrics = self._metrics(
+            r, base_round, wall_ms, len(bucket_paths) if self.use_filters else None,
+            n_popped, tiers, pop_stats, new_stats,
+        )
+        _t = _tlog("metrics_assemble", _t)
+        st.write_round(metrics, "round_metrics", r)
+        _t = _tlog("metrics", _t)
+        # atomic snapshot commit, then GC of what it superseded
+        frontier_n = new_state["frontier_count"]
         st.commit(
             r,
             {
@@ -1123,27 +1236,11 @@ class CrawlEngine:
             },
             state=new_state,
         )
-        # ---- post-commit GC (idempotent: only removes data the committed
-        # manifest can no longer reference) -------------------------------------
-        if superseded:
-            st.gc_bloom(superseded)
-        if compact:
-            st.gc_rounds_below("frontier", r)
-            st.gc_rounds_below("hosts", r)
-            for tbl in ("frontier_ins", "frontier_gains", "hosts_new",
-                        "url_seen", "docs", "edges"):
-                st.gc_rounds_below(tbl, r + 1)
-            # generation dirs are GC'd only after a MAJOR merge supersedes
-            # them; minor compactions leave prior generations live
-            for tbl in major_done:
-                st.gc_gens_below(tbl, r)
+        self._gc(r, superseded, major_done)
         # free this round's localCheckpoint blocks eagerly — durability lives
         # in the snapshot store; relying on GC/ContextCleaner lets executor
         # storage accumulate across a long crawl
-        for df in (
-            ranged, popped, fetched, res, outlinks, flagged, new_urls,
-            popped_res, hosts,
-        ):
+        for df in (popped, fetched, res, outlinks, new_urls, popped_res, hosts):
             df.unpersist()
         return frontier_n
 
